@@ -321,16 +321,6 @@ object Bench {
     val runsJson = results.map { r =>
       "\"" + r._1 + "\":[" + r._4.mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // ... but ONLY for a full run: a SPARK_GRAFT_ONLY-restricted
-    // profiling pass must not clobber the complete committed baseline
-    // with a partial map (the tripwire would then silently lose the
-    // other keys' previous medians)
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_FULL.json"),
-        fullLine + "\n" + s"""{"metric":"runs","queries_runs":$runsJson}""" +
-          "\n" + canaryLine + "\n")
-      catch { case _: Throwable => () }
     // between the big map and the final summary so it survives the
     // driver's keep-the-tail stdout truncation
     println(canaryLine)
@@ -381,16 +371,23 @@ object Bench {
       s""""unit":"sec","runs":$Runs,"stream_runs":${Runs + 1},""" +
       s""""keys":${results.size},"sf":"$sfDir"}"""
     println(lastLine)
-    // mirror it into the committed artifact so the repo copy matches the
-    // stdout stream exactly; parsePrevBench keeps FIRST occurrence from
-    // the first `"queries":{` marker, which in this file is the
-    // full-precision line above, so baselines are unaffected
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_FULL.json"), lastLine + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Throwable => () }
+    // all four lines in one atomic replace (temp file in the same dir,
+    // then a move), so a crash can never mix two rounds' lines;
+    // parsePrevBench reads the FIRST `"queries":{` section, the
+    // full-precision line. Full runs only: a SPARK_GRAFT_ONLY pass must
+    // not clobber the complete committed baseline with a partial map.
+    if (only.isEmpty) {
+      val out = java.nio.file.Paths.get("BENCH_FULL.json").toAbsolutePath
+      val tmp = out.resolveSibling(".BENCH_FULL.json.tmp")
+      try {
+        java.nio.file.Files.writeString(tmp, Seq(fullLine,
+          s"""{"metric":"runs","queries_runs":$runsJson}""", canaryLine,
+          lastLine).mkString("", "\n", "\n"))
+        java.nio.file.Files.move(tmp, out,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      } catch { case _: Throwable => () }
+      finally java.nio.file.Files.deleteIfExists(tmp)
+    }
   }
 
   /** Per-key rolling-best baseline: parse each artifact text and keep

@@ -49,6 +49,8 @@ final case class UpdateResult(accepted: Long, rejected: Long)
   * merges are hash aggregations on (metric, bucket); propagation input is
   * a broadcast semi-join against the (small) touched-bucket set; fetch
   * prunes partitions via the day directory layout and row-group stats.
+  * Finding a cycle's footprint costs no jobs of its own: each level pins
+  * only its merge, which flags the buckets written this cycle.
   * Whole-day partitions older than the archive's retention are vacuumed
   * on write; rows expiring mid-day stay on disk until their day ages out,
   * which fetch never observes (archive selection clamps every read range
@@ -140,6 +142,13 @@ final class WhisperTable private (
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("day").parquet(levelPath(r))
 
+  /** The zone day partitions are derived in. SHORT_IDS mapping: Spark
+    * accepts short zone ids ("PST") for spark.sql.session.timeZone; bare
+    * ZoneId.of would throw on them.
+    */
+  private def sessionZone: java.time.ZoneId = java.time.ZoneId.of(
+    spark.conf.get("spark.sql.session.timeZone"), java.time.ZoneId.SHORT_IDS)
+
   /** R3 disk-side expiry: drop whole day-partition directories whose last
     * second is older than the archive's retention (the ring buffer's
     * reclaim, as a partition-metadata operation — never a data rewrite).
@@ -156,11 +165,7 @@ final class WhisperTable private (
     val dir = new org.apache.hadoop.fs.Path(levelPath(r))
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) return
-    // SHORT_IDS mapping: Spark accepts short zone ids ("PST") for
-    // spark.sql.session.timeZone; bare ZoneId.of would throw on them
-    val zone = java.time.ZoneId.of(
-      spark.conf.get("spark.sql.session.timeZone"),
-      java.time.ZoneId.SHORT_IDS)
+    val zone = sessionZone
     for (st <- fs.listStatus(dir)
          if st.isDirectory && st.getPath.getName.startsWith("day=")) {
       val dayEndS = try {
@@ -225,115 +230,123 @@ final class WhisperTable private (
   }
 
   /** One whisper write cycle over pre-routed points (`archive` = 1-based
-    * level index, 0 = rejected).
+    * level index, 0 = rejected), finest→coarsest: each level = LWW(
+    * existing ∪ propagated-from-finer ∪ direct writes routed here). The
+    * level's one barrier is its pinned merge (its day partitions are read,
+    * then overwritten); the footprint comes from the up-front count job,
+    * that merge, and day arithmetic. A level with no candidate days is
+    * skipped.
     */
   private def writeCycle(
       routed: DataFrame, nowS: Long, strict: Boolean): UpdateResult = {
+    val rets = schema.retentions
+    // one job: the accepted/rejected split and, per level, the days of
+    // the buckets its direct points align to
+    val dayCols = rets.zipWithIndex.map { case (r, i) =>
+      collect_set(when(col("archive") === i + 1,
+        dayString(Buckets.alignTs(col("ts_s"), r.secondsPerPoint))))
+    }
     val cnts = routed.agg(
       sum(when(col("archive") > 0, 1L).otherwise(0L)),
-      sum(when(col("archive") === 0, 1L).otherwise(0L))).head()
+      sum(when(col("archive") === 0, 1L).otherwise(0L)) +: dayCols: _*).head()
     val accepted = if (cnts.isNullAt(0)) 0L else cnts.getLong(0)
     val rejected = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
     if (strict && rejected > 0)
       throw new IllegalArgumentException(
         "Timestamp not covered by any archives in this database")
+    val directDays = rets.indices.map(i => cnts.getSeq[String](i + 2).toSet)
     val pts = routed.filter(col("archive") > 0)
-    // walk finest→coarsest: each level = LWW(existing-in-affected-days ∪
-    // propagated-from-finer ∪ direct writes routed here); only touched
-    // day-partitions are read AND rewritten, and only touched coarse
-    // buckets propagate onward — write-cycle cost tracks the batch's day
-    // footprint, never the archive size
     var propagated: Option[DataFrame] = None
-    for ((r, i) <- schema.retentions.zipWithIndex) {
+    var prevTouched = Set.empty[String]
+    for ((r, i) <- rets.zipWithIndex) {
       val spp = r.secondsPerPoint
-      val direct = Ingest.lwwAlign(
-        pts.filter(col("archive") === i + 1).drop("archive"), spp)
-      val propDf = propagated.getOrElse(emptyLevel)
-      // the buckets this cycle writes at this level — drives the day
-      // pruning and the next level's propagation scope (pinned: tiny,
-      // three consumers)
-      val touched = direct.select("metric", "bucket_ts")
-        .unionAll(propDf.select("metric", "bucket_ts"))
-        .distinct()
-        .localCheckpoint(true)
-      val touchedDays = touched
-        .select(date_format(timestamp_seconds(col("bucket_ts")), "yyyy-MM-dd").as("day"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      // next-coarser buckets this cycle will re-derive (whisper
-      // propagates the current update's intervals, not the archive);
-      // buckets whose finer source window is partially expired are
-      // excluded — their full-window aggregate is no longer derivable,
-      // so the stored coarse value stands
-      val nextOpt = schema.retentions.lift(i + 1)
-      val coarseKeys = nextOpt.map { next =>
-        val nspp = next.secondsPerPoint
-        touched
-          .select(col("metric").as("ck_metric"),
-            Buckets.alignTs(col("bucket_ts"), nspp).as("ck_bucket"))
-          .distinct()
-          .filter(col("ck_bucket") >= nowS - r.maxRetentionSeconds)
-          .localCheckpoint(true) // tiny; drives srcDays AND the semi-join
-      }
-      // days whose rows the merge must SEE: the days being written plus
-      // the full source windows of the coarse buckets re-derived below
-      // (identical to touchedDays while windows stay within one day;
-      // wider only for super-day resolutions)
-      // collected as STRINGS via date_format, like touchedDays above —
-      // Row.getDate on a DateType column throws under
-      // spark.sql.datetime.java8API.enabled=true (LocalDate external
-      // type), and this path runs on every multi-level write
-      val srcDays = (nextOpt, coarseKeys) match {
-        case (Some(next), Some(ck)) =>
-          ck.select(explode(sequence(
-              to_date(timestamp_seconds(col("ck_bucket"))),
-              to_date(timestamp_seconds(col("ck_bucket") + next.secondsPerPoint - 1))))
-              .as("day"))
-            .select(date_format(col("day"), "yyyy-MM-dd").as("day"))
-            .distinct().collect().map(_.getString(0)).toSeq
-        case _ => Nil
-      }
-      val mergeDays = (touchedDays ++ srcDays).distinct
-      val existing =
-        if (mergeDays.isEmpty) emptyLevel else readLevelDays(r, mergeDays)
-      // whisper write order in one update cycle (whisper.py
-      // file_update_many, mirrored by go-whisper's UpdateMany): the
-      // FINEST archive is written and propagated into the coarser rings
-      // FIRST, and only then are the older points packed DIRECTLY into
-      // the coarser archive — so on a contested coarse slot (a batch
-      // whose fresh and just-too-old points align to one coarse bucket,
-      // possible exactly when the finer retention boundary cuts through
-      // it) the DIRECT write lands last and wins; propagation beats only
-      // prior content (max_by on a priority column). The r12 review
-      // caught the previous inverted order.
-      val merged = Seq(
-        existing.withColumn("prio", lit(0)),
-        propDf.withColumn("prio", lit(1)),
-        direct.withColumn("prio", lit(2)))
-        .reduce(_ unionAll _)
-        .groupBy("metric", "bucket_ts")
-        .agg(max_by(col("value"), col("prio")).as("value"))
-      val expired = Rollup.retentionExpiry(merged, r.maxRetentionSeconds, nowS)
-        .localCheckpoint(true) // read below AND written over its own input
-      if (touchedDays.nonEmpty) {
-        writeTouchedDays(r, expired, touchedDays)
-        vacuumLevel(r, nowS)
-      }
-      // R1/R2: re-derive exactly the touched coarse buckets from this
-      // level's merged content
-      (nextOpt, coarseKeys) match {
-        case (Some(next), Some(ck)) =>
+      val nextOpt = rets.lift(i + 1)
+      // days this level may write: its direct days plus the finer
+      // level's touched days mapped onto this grid (a coarse bucket can
+      // start on the day before a finer bucket it covers)
+      val candidates = directDays(i) ++ coverDays(prevTouched, spp, 1)
+      if (candidates.nonEmpty) {
+        // days whose rows the merge must SEE: the candidates widened to
+        // the full source windows of the next level's buckets (extra days
+        // are read, never written)
+        val readDays = nextOpt.fold(candidates)(next =>
+          coverDays(candidates, next.secondsPerPoint, next.secondsPerPoint))
+        val direct = Ingest.lwwAlign(
+          pts.filter(col("archive") === i + 1).drop("archive"), spp)
+        // whisper write order in one update cycle (whisper.py
+        // file_update_many, mirrored by go-whisper's UpdateMany): the
+        // FINEST archive is written and propagated into the coarser rings
+        // FIRST, and only then are the older points packed DIRECTLY into
+        // the coarser archive — so on a contested coarse slot (a batch
+        // whose fresh and just-too-old points align to one coarse bucket,
+        // possible exactly when the finer retention boundary cuts through
+        // it) the DIRECT write lands last and wins; propagation beats only
+        // prior content (max_by on a priority column). `touched` marks the
+        // buckets this cycle writes (set before expiry).
+        val merged = Seq(
+          readLevelDays(r, readDays.toSeq).withColumn("prio", lit(0)),
+          propagated.getOrElse(emptyLevel).withColumn("prio", lit(1)),
+          direct.withColumn("prio", lit(2)))
+          .reduce(_ unionAll _)
+          .groupBy("metric", "bucket_ts")
+          .agg(max_by(col("value"), col("prio")).as("value"),
+            (max(col("prio")) > 0).as("touched"))
+        val expired = Rollup.retentionExpiry(merged, r.maxRetentionSeconds, nowS)
+          .localCheckpoint(true) // the one barrier: read, then written over its input
+        val touched = expired.filter(col("touched"))
+        // without propagated input every touched bucket is a direct one;
+        // a touched bucket dropped by expiry is still a direct one
+        val touchedDays = propagated.fold(directDays(i))(_ =>
+          directDays(i) ++ touched.select(dayString(col("bucket_ts")))
+            .distinct().collect().map(_.getString(0)))
+        if (touchedDays.nonEmpty) {
+          writeTouchedDays(r, expired, touchedDays.toSeq)
+          vacuumLevel(r, nowS)
+        }
+        // R1/R2: re-derive exactly the next-coarser buckets this cycle
+        // touched (whisper propagates the current update's intervals);
+        // buckets whose finer source window is partially expired keep
+        // their stored value — the full-window aggregate is gone
+        propagated = nextOpt.filter(_ => touchedDays.nonEmpty).map { next =>
           val nspp = next.secondsPerPoint
+          val ck = touched
+            .select(col("metric").as("ck_metric"),
+              Buckets.alignTs(col("bucket_ts"), nspp).as("ck_bucket"))
+            .filter(col("ck_bucket") >= nowS - r.maxRetentionSeconds)
+            .distinct()
           val src = expired.join(broadcast(ck),
             col("metric") === col("ck_metric") &&
               Buckets.alignTs(col("bucket_ts"), nspp) === col("ck_bucket"),
             "left_semi")
-          propagated = Some(
-            Rollup.propagate(src, spp, nspp, schema.method, schema.xFilesFactor)
-              .select(col("metric"), col("bucket_ts"), col("value")))
-        case _ => ()
+          Rollup.propagate(src, spp, nspp, schema.method, schema.xFilesFactor)
+            .select(col("metric"), col("bucket_ts"), col("value"))
+        }
+        prevTouched = touchedDays
       }
     }
     UpdateResult(accepted, rejected)
+  }
+
+  /** A bucket's day partition as the writer derives it (session zone). */
+  private def dayString(bucketTs: org.apache.spark.sql.Column) =
+    date_format(timestamp_seconds(bucketTs), "yyyy-MM-dd")
+
+  /** Session-zone days covered by `[b, b + width)` for every `spp`-aligned
+    * bucket `b` that holds a second of one of `days` — the driver-side
+    * twin of [[dayString]], so no job is needed to scope a read.
+    */
+  private def coverDays(days: Set[String], spp: Int, width: Long): Set[String] = {
+    val zone = sessionZone
+    def dayOf(s: Long) =
+      java.time.Instant.ofEpochSecond(s).atZone(zone).toLocalDate
+    days.flatMap { d =>
+      val day = java.time.LocalDate.parse(d)
+      val startS = day.atStartOfDay(zone).toEpochSecond
+      val endS = day.plusDays(1).atStartOfDay(zone).toEpochSecond
+      val last = dayOf(Math.floorDiv(endS - 1, spp.toLong) * spp + width - 1)
+      Iterator.iterate(dayOf(Math.floorDiv(startS, spp.toLong) * spp))(_.plusDays(1))
+        .takeWhile(!_.isAfter(last)).map(_.toString)
+    }
   }
 
   /** Q1 batched: dense series for MANY metrics in one plan — the

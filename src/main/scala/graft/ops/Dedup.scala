@@ -1222,22 +1222,6 @@ object Dedup {
     * per-component stars centered at the minimum doc_id; round count is
     * O(log²) in component size.
     */
-  /** Best-effort release of a localCheckpoint's storage blocks.
-    * `Dataset.unpersist` only uncaches catalog-cache entries — the
-    * checkpoint RDD lives OUTSIDE it (the Bench quiesce note), behind
-    * the plan's LogicalRDD leaf, which is `private[sql]`; reflection
-    * reaches its `rdd` without tracking persistent-RDD ids globally
-    * (a global sweep could release a concurrent session's blocks).
-    */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach { node =>
-      if (node.getClass.getSimpleName == "LogicalRDD")
-        node.getClass.getMethod("rdd").invoke(node) match {
-          case r: org.apache.spark.rdd.RDD[_] => r.unpersist(false); ()
-          case _ => ()
-        }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   private[graft] def distributedCluster(pairs: DataFrame): DataFrame = {
     val nodes = pairs.select(col("doc_a").as("doc_id"))
       .unionAll(pairs.select(col("doc_b").as("doc_id")))
@@ -1276,7 +1260,7 @@ object Dedup {
       // O(log²) rounds would otherwise pin every generation in block
       // storage for the life of the job — peak = SUM of all rounds'
       // edge sets instead of two (r16 review)
-      releaseLocalCheckpoint(edges)
+      graft.streaming.CheckpointRelease.release(edges)
       edges = next
       converged = changed == 0
     }

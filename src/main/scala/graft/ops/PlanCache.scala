@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * from the parquet inputs (PlanCacheSpec pins this by regenerating the
   * input file and watching the re-read change, and pins plan identity
   * against a fresh build). The entry key carries the data dir plus
-  * [[Dedup.freshDigest]] of the three canonical inputs, so a
+  * [[Dedup.freshDigest]] of every `*.parquet` entry in the dir, so a
   * regenerated input under the same path rebuilds instead of serving a
   * stale file listing (the r2 stale-data footgun rule, applied to
   * plans; superseded-digest entries linger in the session map until the
@@ -39,31 +39,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * construction-time collect/head whose embedded result would outlive
   * the invocation (driver union-find, observed-range sizing), and not
   * the wsp family (manifest collects inside datasource resolution).
-  * Kill switch: SPARK_GRAFT_PLAN_CACHE=0 (value semantics, [[enabled]]).
   */
 object PlanCache {
   private val cache = new SessionCache[DataFrame]
 
-  /** `=0` / `false` disable; unset or anything else keeps the cache on. */
-  private[graft] def enabled(v: Option[String]): Boolean =
-    v.forall(s => s != "0" && !s.equalsIgnoreCase("false"))
-
-  private lazy val on = enabled(sys.env.get("SPARK_GRAFT_PLAN_CACHE"))
-
-  /** The canonical inputs a batch key can derive from; a missing file
-    * digests as absent (constant), which is correct for fixture dirs.
+  /** The `*.parquet` entries of `dir`, by name — every input a key can
+    * read, so no key can outlive a regeneration of one it reads; a
+    * missing dir has none.
     */
-  private val Inputs =
-    Seq("documents.parquet", "events.parquet", "embeddings.parquet")
+  private def inputs(s: SparkSession, dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    try p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted.toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   /** Memoized `build` of a pure-DAG query frame for this (session, dir,
     * input-freshness, key).
     */
   def memo(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    if (!on) build
-    else {
-      val fresh = Inputs.map(f => Dedup.freshDigest(s, dir, f)).mkString
-      cache.forSession(s).getOrElseUpdate(s"$key|$dir|$fresh", build)
-    }
+      build: => DataFrame): DataFrame = {
+    val fresh = inputs(s, dir).map(f => Dedup.freshDigest(s, dir, f)).mkString
+    cache.forSession(s).getOrElseUpdate(s"$key|$dir|$fresh", build)
+  }
 }

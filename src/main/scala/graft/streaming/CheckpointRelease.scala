@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Releases the storage of a superseded `localCheckpoint`'ed state
-  * generation.
+/** Releases the storage of a superseded `localCheckpoint`'ed generation:
+  * a streaming store's state, or a round of `Dedup.distributedCluster`.
   *
   * `Dataset.unpersist()` does NOT do this: in Spark 4.1.2 it only calls
   * `CacheManager.uncacheQuery`, and `localCheckpoint` persists the
@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * out (collect/write) — that boundary is the stores' documented
   * contract, and transient state is bounded at two generations.
   */
-private[streaming] object CheckpointRelease {
+private[graft] object CheckpointRelease {
 
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }

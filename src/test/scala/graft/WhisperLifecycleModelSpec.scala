@@ -216,17 +216,29 @@ class WhisperLifecycleModelSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `f` with the session timezone set to `zone`. */
+  private def inZone[T](zone: String)(f: => T): T = {
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, zone)
+    try f finally spark.conf.set(key, prev)
+  }
+
   test("randomized lifecycle: table matches the in-memory whisper model") {
     import spark.implicits._
-    for (seed <- 1 to 6) {
+    // each zone's run starts at that zone's midnight, so its batches
+    // cross a day edge; under +05:30 the edge falls half-way through a
+    // UTC hour, where the write cycle's day arithmetic must still hold
+    for (zone <- Seq("UTC", "Asia/Kolkata"); seed <- 1 to 6) inZone(zone) {
       val rnd = new Random(seed)
       val schema = randSchema(rnd)
       val dir = Files.createTempDirectory(s"graft_life_$seed").toFile
       dir.delete()
       val table = WhisperTable.create(spark, dir.getAbsolutePath, schema)
       val model = new Model(schema)
-      var now = Base
-      val ctx0 = s"seed=$seed schema=$schema"
+      var now = java.time.Instant.ofEpochSecond(Base).atZone(java.time.ZoneOffset.UTC)
+        .toLocalDate.atStartOfDay(java.time.ZoneId.of(zone)).toEpochSecond
+      val ctx0 = s"zone=$zone seed=$seed schema=$schema"
       for (batch <- 1 to 3) {
         now += rnd.nextInt(schema.retentions.last.secondsPerPoint * 3).toLong
         val pts = randPoints(rnd, schema, now)
